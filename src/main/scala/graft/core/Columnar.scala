@@ -2,9 +2,10 @@ package graft.core
 
 import scala.collection.mutable
 
-import org.apache.spark.ml.linalg.Vector
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.functions.col
 import org.apache.spark.storage.StorageLevel
 
 /** One column's values for one block of instances (row order preserved). */
@@ -29,24 +30,35 @@ final case class SparseBlock(n: Int, rows: Array[Int], values: Array[Byte])
     extends ColBlock
 
 /**
+ * One instance block of the columnar working set: every feature's
+ * column block plus the block's class-label bytes, in row order.
+ * `id` is the source partition id.
+ */
+final case class Block(id: Int, cols: Array[ColBlock], label: Array[Byte]) {
+  /** Number of instances in the block. */
+  def n: Int = label.length
+
+  /** Column `f`; `f == cols.length` is the label column. */
+  def column(f: Int): ColBlock =
+    if (f == cols.length) DenseBlock(label) else cols(f)
+}
+
+/**
  * Columnar (transposed) working set: the engine's core internal
  * representation, mirroring the reference's `ColumnarData`
  * (reference: InfoSelector.scala:73-75) re-expressed Spark-first.
  *
- * Layout: `RDD[((feature, block), LabeledBlock)]` where `block` is the
- * source partition id and each record carries BOTH that feature's column
- * block and the block's class-label bytes. The label is also kept as its
- * own column at index `nFeatures` (the reference appends it the same
+ * Layout: `RDD[Block]`, one cached record per instance block holding all
+ * of that block's columns and its labels. The label is also counted as
+ * column `nFeatures` in `cardinality` (the reference appends it the same
  * way, InfoSelector.scala:431).
  *
  * Scale notes (100 TB design):
- * - BLOCK-MAJOR CO-LOCATION: all columns of one instance block stay in
- *   the block's own partition — the transpose is a pure mapPartitions
- *   (ZERO shuffle; the only exchange anywhere is the optional
- *   parallelism repartition of the raw rows, which ships unsafe rows
- *   once). Every per-block pairing the kernels need (x vs label, x vs
- *   the per-round selected column y) is partition-local by
- *   construction, so NO column is ever collected, broadcast, or
+ * - The transpose is a pure mapPartitions (ZERO shuffle; the only
+ *   exchange anywhere is the optional parallelism repartition of the raw
+ *   rows, which ships unsafe rows once). Every per-block pairing the
+ *   kernels need (x vs label, x vs the per-round selected column y) is
+ *   inside one record, so NO column is ever collected, broadcast, or
  *   shuffled during selection: at 10^11 rows a collected/broadcast
  *   column (~100 GB) would exceed both driver and executor memory —
  *   here the per-task working set stays O(block), independent of
@@ -58,17 +70,9 @@ final case class SparseBlock(n: Int, rows: Array[Int], values: Array[Byte])
  *   histograms merge through a keyed reduce that shuffles only
  *   O(nFeatures x blocks) tiny count matrices (<= 6 KB each for a
  *   256x|Y| table) — independent of nInstances.
- * - The label column rides along with every feature block (in-memory
- *   it's one shared array reference per block, not a copy).
- * - Blocks carry their own id, so block-id keying can never break the
- *   x/y alignment invariant (SURVEY §7 risk 1): alignment is by block
- *   id, never partition placement — and co-location makes the aligned
- *   pairing free.
  */
-final case class LabeledBlock(x: ColBlock, label: Array[Byte])
-
 final case class ColumnarData(
-    data: RDD[((Int, Int), LabeledBlock)],
+    data: RDD[Block],
     nInstances: Long,
     nFeatures: Int,
     cardinality: Array[Int]) {
@@ -76,14 +80,10 @@ final case class ColumnarData(
   /** Index of the class-label column. */
   def labelIndex: Int = nFeatures
 
-  /** Collect one feature's blocks (block id -> densified bytes).
-    * TEST/DEBUG ONLY — the engine never collects a column: the greedy
-    * loop's per-round y column is read partition-locally thanks to
-    * block-major co-location (see [[Histograms.histogram3D]]). */
+  /** Collect one column's blocks (block id -> densified bytes).
+    * TEST/DEBUG ONLY — the engine never collects a column. */
   def collectColumn(feature: Int): Map[Int, Array[Byte]] =
-    data.filter(_._1._1 == feature)
-      .map { case ((_, b), blk) => (b, Columnar.densify(blk.x)) }
-      .collect().toMap
+    data.map(b => (b.id, Columnar.densify(b.column(feature)))).collect().toMap
 
   def unpersist(): Unit = data.unpersist(blocking = false)
 }
@@ -122,14 +122,15 @@ object Columnar {
   val MaxSparseFeatures: Int = 1 << 22
 
   /**
-   * Block-local transpose of a `(label, features)` DataFrame into
-   * columnar blocks (reference semantics: InfoSelector.scala:421-438),
-   * each carrying the block's label bytes.
+   * Block-local transpose of a `(label, features)` DataFrame into one
+   * [[Block]] per partition (reference semantics:
+   * InfoSelector.scala:421-438).
    *
    * The storage mode follows the input vectors: sparse rows transpose
    * into [[SparseBlock]]s (implicit zeros never materialize — neither in
    * the shuffle nor the cache), dense rows into [[DenseBlock]]s. The
-   * label column is always dense.
+   * label column is always dense. Each block takes the vector size from
+   * its first row; rows and blocks that disagree are rejected.
    *
    * The hot loop reads the vector UDT struct fields straight out of
    * Tungsten InternalRows (`queryExecution.toRdd`): no Row wrapper, no
@@ -139,55 +140,57 @@ object Columnar {
   def fromLabeledDf(
       df: DataFrame,
       featuresCol: String = "features",
-      labelCol: String = "label",
-      numPartitions: Int = 0): ColumnarData = {
+      labelCol: String = "label"): ColumnarData = {
+    val rows = spread(df.select(col(labelCol).cast("double"), col(featuresCol)))
+    val blocks = rows.mapPartitionsWithIndex { (pid, rowIt) =>
+      var nf = -1
+      val it = rowIt.map { row =>
+        // UnsafeRow reads a null as 0 — fail instead of inventing class 0
+        if (row.isNullAt(0)) throw new IllegalArgumentException(
+          s"null value in label column '$labelCol'")
+        if (row.isNullAt(1)) throw new IllegalArgumentException(
+          s"null vector in features column '$featuresCol'")
+        val size = vecSize(row.getStruct(1, 4))
+        if (nf < 0) nf = size
+        if (size != nf) throw new IllegalArgumentException(
+          s"Inconsistent vector size in features column '$featuresCol': $size != $nf")
+        row
+      }.buffered
+      if (!it.hasNext) Iterator.empty
+      else {
+        // ml.VectorUDT layout: struct<type:byte, size:int,
+        //   indices:array<int>, values:array<double>>; type 0 = sparse
+        val sparse = it.head.getStruct(1, 4).getByte(0) == 0
+        Iterator.single(
+          if (sparse) transposeSparse(pid, it, nf) else transposeDense(pid, it, nf))
+      }
+    }
+    finish(blocks, s"features column '$featuresCol'")
+  }
 
-    val projected = df.select(
-      org.apache.spark.sql.functions.col(labelCol).cast("double"),
-      org.apache.spark.sql.functions.col(featuresCol))
-    val target =
-      if (numPartitions > 0) numPartitions
-      else df.sparkSession.sparkContext.defaultParallelism
-    val spread =
+  /** The projected rows, repartitioned up to `defaultParallelism` when
+    * the input has fewer partitions (the exchange ships unsafe rows). */
+  private def spread(projected: DataFrame): RDD[InternalRow] = {
+    val target = projected.sparkSession.sparkContext.defaultParallelism
+    val df =
       if (projected.queryExecution.toRdd.getNumPartitions < target) {
         projected.repartition(target)
       } else projected
-    val nf = df.select(featuresCol).head()
-      .getAs[Vector](0).size
-    val nCols = nf + 1
-    val rows = spread.queryExecution.toRdd
-
-    val transposed: RDD[((Int, Int), LabeledBlock)] =
-      rows.mapPartitionsWithIndex { (pid, it0) =>
-        val it = it0.buffered
-        if (!it.hasNext) Iterator.empty
-        else {
-          // ml.VectorUDT layout: struct<type:byte, size:int,
-          //   indices:array<int>, values:array<double>>; type 0 = sparse
-          val sparseFirst = it.head.getStruct(1, 4).getByte(0) == 0
-          if (sparseFirst) transposeSparse(pid, it, nf)
-          else transposeDense(pid, it, nf)
-        }
-      }
-    finish(transposed, nCols)
+    df.queryExecution.toRdd
   }
 
   /** Vector size from the UDT struct (dense: values length; sparse: the
     * size field). */
-  @inline private def vecSize(
-      s: org.apache.spark.sql.catalyst.InternalRow): Int =
+  @inline private def vecSize(s: InternalRow): Int =
     if (s.getByte(0) == 0) s.getInt(1) else s.getArray(3).numElements()
 
   /** Dense-mode partition transpose: one byte builder per column. */
-  private def transposeDense(pid: Int,
-      it: Iterator[org.apache.spark.sql.catalyst.InternalRow],
-      nf: Int): Iterator[((Int, Int), LabeledBlock)] = {
+  private def transposeDense(pid: Int, it: Iterator[InternalRow],
+      nf: Int): Block = {
     val builders = Array.fill(nf)(new mutable.ArrayBuilder.ofByte)
     val labels = new mutable.ArrayBuilder.ofByte
     it.foreach { row =>
       val vec = row.getStruct(1, 4)
-      require(vecSize(vec) == nf,
-        s"Inconsistent vector size: ${vecSize(vec)} != $nf")
       if (vec.getByte(0) != 0) {
         val vals = vec.getArray(3)
         var j = 0
@@ -205,25 +208,20 @@ object Columnar {
       }
       labels += toByteChecked(row.getDouble(0))
     }
-    val labelArr = labels.result()
-    val out = Iterator.tabulate(nf) { f =>
-      ((f, pid), LabeledBlock(DenseBlock(builders(f).result()), labelArr))
-    }
-    out ++ Iterator.single(
-      ((nf, pid), LabeledBlock(DenseBlock(labelArr), labelArr)))
+    Block(pid, builders.map(b => DenseBlock(b.result()): ColBlock),
+      labels.result())
   }
 
   /**
    * Sparse-mode partition transpose: nonzeros pack into one long each
    * (feature << 40 | row << 8 | value), a single array sort groups them
    * by feature, and per-feature slices become [[SparseBlock]]s. Every
-   * feature emits a record (possibly with zero explicit entries) so the
+   * feature gets a column (possibly with zero explicit entries) so the
    * histogram kernels see every (feature, block) cell — implicit zeros
    * are patched in-kernel, never materialized.
    */
-  private def transposeSparse(pid: Int,
-      it: Iterator[org.apache.spark.sql.catalyst.InternalRow],
-      nf: Int): Iterator[((Int, Int), LabeledBlock)] = {
+  private def transposeSparse(pid: Int, it: Iterator[InternalRow],
+      nf: Int): Block = {
     require(nf < MaxSparseFeatures,
       s"sparse transpose supports < $MaxSparseFeatures features, got $nf")
     val packed = new mutable.ArrayBuilder.ofLong
@@ -231,8 +229,6 @@ object Columnar {
     var rowIdx = 0
     it.foreach { row =>
       val vec = row.getStruct(1, 4)
-      require(vecSize(vec) == nf,
-        s"Inconsistent vector size: ${vecSize(vec)} != $nf")
       if (vec.getByte(0) == 0) {
         val ids = vec.getArray(2); val vals = vec.getArray(3)
         val nnz = ids.numElements()
@@ -258,13 +254,12 @@ object Columnar {
       labels += toByteChecked(row.getDouble(0))
       rowIdx += 1
     }
-    val labelArr = labels.result()
     val n = rowIdx
     val arr = packed.result()
     java.util.Arrays.sort(arr)
     // slice per feature
     var p = 0
-    val out = Iterator.tabulate(nf) { f =>
+    val cols = Array.tabulate[ColBlock](nf) { f =>
       val rows = new mutable.ArrayBuilder.ofInt
       val vals = new mutable.ArrayBuilder.ofByte
       while (p < arr.length && (arr(p) >>> 40).toInt == f) {
@@ -272,17 +267,15 @@ object Columnar {
         vals += (arr(p) & 0xFFL).toByte
         p += 1
       }
-      ((f, pid), LabeledBlock(SparseBlock(n, rows.result(), vals.result()),
-        labelArr))
+      SparseBlock(n, rows.result(), vals.result())
     }
-    out ++ Iterator.single(
-      ((nf, pid), LabeledBlock(DenseBlock(labelArr), labelArr)))
+    Block(pid, cols, labels.result())
   }
 
   /**
    * Fast-path transpose from integer-valued columns (no ml.Vector
    * construction or UDT serialization on the hot path). `featureCols`
-   * become features 0..n-1 in order; `labelCol` becomes column n.
+   * become features 0..n-1 in order; `labelCol` becomes the label.
    *
    * Iterates Tungsten InternalRows directly (`queryExecution.toRdd`) —
    * primitive `getInt` reads with zero per-row boxing, and the
@@ -292,88 +285,68 @@ object Columnar {
   def fromIntColumns(
       df: DataFrame,
       featureCols: Seq[String],
-      labelCol: String,
-      numPartitions: Int = 0): ColumnarData = {
+      labelCol: String): ColumnarData = {
+    val names = (featureCols :+ labelCol).toArray
     val nf = featureCols.length
-    val nCols = nf + 1
-    val projected = df.select((featureCols :+ labelCol).map(
-      c => org.apache.spark.sql.functions.col(c).cast("int")): _*)
-    val target =
-      if (numPartitions > 0) numPartitions
-      else df.sparkSession.sparkContext.defaultParallelism
-    val spread =
-      if (projected.queryExecution.toRdd.getNumPartitions < target) {
-        projected.repartition(target)
-      } else projected
-    val rows = spread.queryExecution.toRdd
-    val transposed: RDD[((Int, Int), LabeledBlock)] =
-      rows.mapPartitionsWithIndex { (pid, it) =>
-        val builders = Array.fill(nCols)(new mutable.ArrayBuilder.ofByte)
-        var n = 0
-        it.foreach { row =>
-          var j = 0
-          while (j < nCols) {
-            // UnsafeRow.getInt silently reads null as 0 — fail loudly
-            // instead of corrupting histograms with phantom zeros
-            if (row.isNullAt(j)) {
-              throw new IllegalArgumentException(
-                s"null value in column $j: feature columns must be non-null")
-            }
-            builders(j) += toByteChecked(row.getInt(j).toDouble); j += 1
+    val rows = spread(df.select(names.map(c => col(c).cast("int")): _*))
+    val blocks = rows.mapPartitionsWithIndex { (pid, it) =>
+      val builders = Array.fill(nf + 1)(new mutable.ArrayBuilder.ofByte)
+      it.foreach { row =>
+        var j = 0
+        while (j <= nf) {
+          // UnsafeRow.getInt silently reads null as 0 — fail loudly
+          // instead of corrupting histograms with phantom zeros
+          if (row.isNullAt(j)) {
+            throw new IllegalArgumentException(
+              s"null value in column '${names(j)}': columns must be non-null")
           }
-          n += 1
-        }
-        if (n == 0) Iterator.empty
-        else {
-          val labelArr = builders(nCols - 1).result()
-          Iterator.tabulate(nf)(f =>
-            ((f, pid), LabeledBlock(DenseBlock(builders(f).result()), labelArr))
-          ) ++ Iterator.single(
-            ((nf, pid), LabeledBlock(DenseBlock(labelArr), labelArr)))
+          builders(j) += toByteChecked(row.getInt(j).toDouble); j += 1
         }
       }
-    finish(transposed, nCols)
+      val label = builders(nf).result()
+      if (label.isEmpty) Iterator.empty
+      else Iterator.single(Block(pid,
+        Array.tabulate[ColBlock](nf)(f => DenseBlock(builders(f).result())),
+        label))
+    }
+    finish(blocks, s"columns ${names.mkString(", ")}")
   }
 
-  /** Persist (block-major: records stay in their source partition — no
-    * shuffle, so each block's columns are co-located with each other by
-    * construction) and run the single stats pass: per-feature (max
-    * value, instance count) in one job (cardinality pre-pass per
-    * reference InfoTheory.scala:415-419 fused with the instance count). */
-  private def finish(
-      transposed: RDD[((Int, Int), LabeledBlock)],
-      nCols: Int): ColumnarData = {
-    val partitioned = transposed
-      .persist(StorageLevel.MEMORY_AND_DISK)
-
-    val stats = partitioned
-      .map { case ((f, _), blk) =>
-        val (m, cnt) = blk.x match {
-          case DenseBlock(bytes) =>
-            var mx = 0
-            var i = 0
-            while (i < bytes.length) {
-              val v = idx(bytes(i)); if (v > mx) mx = v; i += 1
-            }
-            (mx, bytes.length.toLong)
-          case SparseBlock(n, _, vals) =>
-            var mx = 0
-            var i = 0
-            while (i < vals.length) {
-              val v = idx(vals(i)); if (v > mx) mx = v; i += 1
-            }
-            (mx, n.toLong)
-        }
-        (f, (m, cnt))
-      }
-      .reduceByKey((a, b) => (math.max(a._1, b._1), a._2 + b._2))
-      .collect()
-    val cardinality = new Array[Int](nCols)
-    var nInstances = 0L
-    stats.foreach { case (f, (m, c)) =>
-      cardinality(f) = m + 1
-      if (f == nCols - 1) nInstances = c
+  /** Largest value of a column block (implicit zeros count as 0). */
+  private def maxValue(blk: ColBlock): Int = {
+    val bytes = blk match {
+      case DenseBlock(b) => b
+      case SparseBlock(_, _, v) => v
     }
-    ColumnarData(partitioned, nInstances, nCols - 1, cardinality)
+    var mx = 0
+    var i = 0
+    while (i < bytes.length) {
+      val v = idx(bytes(i)); if (v > mx) mx = v; i += 1
+    }
+    mx
+  }
+
+  /** Persist the blocks (no shuffle: each stays in its source partition)
+    * and run the single stats pass: one aggregate of (max value per
+    * column, row count) over the blocks (cardinality pre-pass per
+    * reference InfoTheory.scala:415-419 fused with the instance count).
+    * Rejects an empty input and blocks of different widths. */
+  private def finish(blocks: RDD[Block], source: String): ColumnarData = {
+    val cached = blocks.persist(StorageLevel.MEMORY_AND_DISK)
+    val (maxes, n) = cached
+      .map(b => (Array.tabulate(b.cols.length + 1)(f => maxValue(b.column(f))),
+        b.n.toLong))
+      .fold((Array.emptyIntArray, 0L)) { case (a @ (ma, na), b @ (mb, nb)) =>
+        if (ma.isEmpty) b
+        else if (mb.isEmpty) a
+        else {
+          if (ma.length != mb.length) throw new IllegalArgumentException(
+            s"Inconsistent vector size in $source: " +
+              s"${ma.length - 1} != ${mb.length - 1}")
+          (Array.tabulate(ma.length)(f => math.max(ma(f), mb(f))), na + nb)
+        }
+      }
+    if (n == 0) throw new IllegalArgumentException(s"empty input: no rows in $source")
+    ColumnarData(cached, n, maxes.length - 1, maxes.map(_ + 1))
   }
 }

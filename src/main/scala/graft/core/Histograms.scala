@@ -1,7 +1,5 @@
 package graft.core
 
-import scala.collection.mutable
-
 import org.apache.spark.rdd.RDD
 
 /** Dense 2-D contingency table for one feature: counts(x*ys + y). */
@@ -30,14 +28,15 @@ final case class Hist3D(xs: Int, ys: Int, zs: Int, counts: Array[Long]) {
  *
  * Re-expression of the reference's histogram dataflows
  * (reference: computeHistograms InfoTheory.scala:474-521,
- * computeConditionalHistograms InfoTheory.scala:535-586): each partition
- * scans its feature blocks against the block-carried label column (and
- * at most one broadcast column) and accumulates tight primitive-array
- * matrices (the partial/combiner stage); the keyed merge then shuffles
- * only O(nFeatures x partitions) small matrices (<= xs*|Y|(*|Z|) longs
- * each) — independent of nInstances. Scan parallelism follows the
- * (feature, block) partitioning, so no task ever scans a whole feature
- * column, and no label column ever crosses the driver.
+ * computeConditionalHistograms InfoTheory.scala:535-586): each task
+ * scans its cached [[Block]]s, pairs every feature column with the
+ * block's own label column (and, per round, the block's own selected
+ * column), and accumulates tight primitive-array matrices per feature
+ * (the partial/combiner stage); the keyed merge then shuffles only
+ * O(nFeatures x blocks) small matrices (<= xs*|Y|(*|Z|) longs each) —
+ * independent of nInstances. Scan parallelism follows the blocks, so no
+ * task ever scans a whole feature column, and no column ever crosses
+ * the driver.
  *
  * Sparse blocks use implicit-zero patching (reference semantics:
  * InfoTheory.scala:274-310, :324-390): explicit entries count directly,
@@ -48,27 +47,33 @@ object Histograms {
 
   import Columnar.idx
 
+  /** `(feature, table)` for every table a task allocated. */
+  private def nonNull[T <: AnyRef](acc: Array[T]): Iterator[(Int, T)] =
+    acc.iterator.zipWithIndex.collect { case (h, f) if h != null => (f, h) }
+
   /**
-   * 2-D contingency tables of every feature vs. the block-carried class
-   * label. Excludes the label column itself
-   * (reference filter at InfoTheory.scala:429-430).
+   * 2-D contingency tables of every feature vs. the block's class label
+   * (the label is not a feature, as in the reference filter at
+   * InfoTheory.scala:429-430).
    */
   def histogram2D(col: ColumnarData): RDD[(Int, Hist2D)] = {
     val ys = col.cardinality(col.labelIndex)
-    val labelIdx = col.labelIndex
+    val nf = col.nFeatures
     val cards = col.data.sparkContext.broadcast(col.cardinality)
     col.data.mapPartitions { it =>
-      val acc = new mutable.HashMap[Int, Hist2D]
-      it.foreach { case ((f, _), blk) =>
-        if (f != labelIdx) {
-          val h = acc.getOrElseUpdate(f, {
+      val acc = new Array[Hist2D](nf)
+      it.foreach { blk =>
+        var f = 0
+        while (f < nf) {
+          if (acc(f) == null) {
             val xs = cards.value(f)
-            Hist2D(xs, ys, new Array[Long](xs * ys))
-          })
-          accumulate2D(blk.x, blk.label, h.counts, ys)
+            acc(f) = Hist2D(xs, ys, new Array[Long](xs * ys))
+          }
+          accumulate2D(blk.cols(f), blk.label, acc(f).counts, ys)
+          f += 1
         }
       }
-      acc.iterator
+      nonNull(acc)
     }.reduceByKey(_.add(_))
   }
 
@@ -98,62 +103,41 @@ object Histograms {
   }
 
   /**
-   * 3-D contingency tables of every feature x vs. column y (the newly
-   * selected feature) and the block-carried class label as z, excluding
-   * y and the label themselves (reference: FilterWitH3 application,
-   * InfoTheory.scala:455-456).
+   * 3-D contingency tables of every feature x vs. feature y (the newly
+   * selected one) and the block's class label as z, excluding y itself
+   * (reference: FilterWitH3 application, InfoTheory.scala:455-456).
    *
-   * The y column is NEVER collected, broadcast or shuffled: block-major
-   * co-location (see [[ColumnarData]]) guarantees each partition holds
-   * the y blocks of exactly the blocks it scans, so every task reads y
-   * partition-locally.
-   *
-   * The scan is single-pass and streaming: records arrive block-grouped
-   * and feature-ordered within a block (the transpose emits features
-   * 0..nf in order and the cached partition preserves it), so at most
-   * the records PRECEDING a block's y record are stashed (references,
-   * not copies) and replayed once y is densified; everything after y
-   * streams straight through. Unlike a whole-partition toArray, a
-   * spilled-and-reread partition never pins more than the pre-y prefix
-   * of one block in task heap. Per-round cost at any scale: one cached
+   * The y column is NEVER collected, broadcast or shuffled: each block
+   * densifies its own y column once and folds every other column of the
+   * same record against it. Per-round cost at any scale: one cached
    * scan + the O(nFeatures x blocks) matrix merge — no O(nInstances)
    * term on any single node.
    */
   def histogram3D(col: ColumnarData, yFeat: Int): RDD[(Int, Hist3D)] = {
+    require(yFeat >= 0 && yFeat < col.nFeatures,
+      s"y must be a feature in [0, ${col.nFeatures}), got $yFeat")
     val ys = col.cardinality(yFeat)
     val zs = col.cardinality(col.labelIndex)
-    val labelIdx = col.labelIndex
+    val nf = col.nFeatures
     val cards = col.data.sparkContext.broadcast(col.cardinality)
     col.data.mapPartitions { it =>
-      val acc = new mutable.HashMap[Int, Hist3D]
-      def fold(f: Int, blk: LabeledBlock, ycol: Array[Byte]): Unit =
-        if (f != yFeat && f != labelIdx) {
-          val h = acc.getOrElseUpdate(f, {
-            val xs = cards.value(f)
-            Hist3D(xs, ys, zs, new Array[Long](xs * ys * zs))
-          })
-          accumulate3D(blk.x, ycol, blk.label, h.counts, h.xs, ys, zs)
+      val acc = new Array[Hist3D](nf)
+      it.foreach { blk =>
+        val ycol = Columnar.densify(blk.cols(yFeat))
+        var f = 0
+        while (f < nf) {
+          if (f != yFeat) {
+            if (acc(f) == null) {
+              val xs = cards.value(f)
+              acc(f) = Hist3D(xs, ys, zs, new Array[Long](xs * ys * zs))
+            }
+            accumulate3D(blk.cols(f), ycol, blk.label, acc(f).counts,
+              acc(f).xs, ys, zs)
+          }
+          f += 1
         }
-      var curBlock = -1
-      var ycol: Array[Byte] = null
-      val pending = new mutable.ArrayBuffer[(Int, LabeledBlock)]
-      it.foreach { case ((f, block), blk) =>
-        if (block != curBlock) {
-          if (pending.nonEmpty) throw new IllegalStateException(
-            s"block $curBlock lost co-location with feature $yFeat")
-          curBlock = block
-          ycol = null
-        }
-        if (f == yFeat) {
-          ycol = Columnar.densify(blk.x)
-          pending.foreach { case (pf, pblk) => fold(pf, pblk, ycol) }
-          pending.clear()
-        } else if (ycol != null) fold(f, blk, ycol)
-        else pending += ((f, blk))
       }
-      if (pending.nonEmpty) throw new IllegalStateException(
-        s"block $curBlock lost co-location with feature $yFeat")
-      acc.iterator
+      nonNull(acc)
     }.reduceByKey(_.add(_))
   }
 
@@ -189,26 +173,28 @@ object Histograms {
 
   /**
    * Per-feature value frequencies (including the label column) in ONE
-   * distributed job: each partition folds its blocks into <= 256-slot
-   * arrays, the keyed merge ships O(nFeatures x partitions) tiny arrays,
+   * distributed job: each block folds its columns into <= 256-slot
+   * arrays, the keyed merge ships O(nFeatures x blocks) tiny arrays,
    * and only the <= 256-row-per-feature result reaches the driver
    * (reference: computeFrequency, InfoTheory.scala:230-235 — but
    * distributed instead of per-column collects).
    */
   def frequenciesByFeature(col: ColumnarData): Map[Int, Array[Long]] = {
     val cards = col.data.sparkContext.broadcast(col.cardinality)
-    col.data.map { case ((f, _), blk) =>
-      val out = new Array[Long](cards.value(f))
-      blk.x match {
-        case DenseBlock(bytes) =>
-          var i = 0
-          while (i < bytes.length) { out(idx(bytes(i))) += 1L; i += 1 }
-        case SparseBlock(n, rows, vals) =>
-          var i = 0
-          while (i < vals.length) { out(idx(vals(i))) += 1L; i += 1 }
-          out(0) += n - rows.length
+    col.data.flatMap { blk =>
+      Iterator.tabulate(blk.cols.length + 1) { f =>
+        val out = new Array[Long](cards.value(f))
+        blk.column(f) match {
+          case DenseBlock(bytes) =>
+            var i = 0
+            while (i < bytes.length) { out(idx(bytes(i))) += 1L; i += 1 }
+          case SparseBlock(n, rows, vals) =>
+            var i = 0
+            while (i < vals.length) { out(idx(vals(i))) += 1L; i += 1 }
+            out(0) += n - rows.length
+        }
+        (f, out)
       }
-      (f, out)
     }.reduceByKey { (a, b) =>
       var i = 0
       while (i < a.length) { a(i) += b(i); i += 1 }

@@ -20,19 +20,8 @@ trait FrequencyDiscretizerParams extends Params
     "number of buckets (>= 2)", ParamValidators.gtEq(2))
   def getNumBuckets: Int = $(numBuckets)
 
-  /** Split-finding strategy. `true` (default): the reference-parity
-    * sample-exact path (Bernoulli sample + collect + stride scan —
-    * bit-reproducible against the reference). `false`: distributed
-    * Greenwald-Khanna sketch (`approxQuantile`) — no driver sample, one
-    * pass, bounded memory at any nInstances; the scale path when exact
-    * reference parity is not required. */
-  final val exactSplits = new BooleanParam(this, "exactSplits",
-    "true = reference-parity sampled split search; " +
-      "false = distributed approxQuantile sketch")
-
   setDefault(numBuckets -> 2, inputCol -> "features",
-    outputCol -> "discFeatures", seed -> this.getClass.getName.hashCode.toLong,
-    exactSplits -> true)
+    outputCol -> "discFeatures", seed -> this.getClass.getName.hashCode.toLong)
 
   protected def validateAndTransformSchema(schema: StructType): StructType = {
     require(schema($(inputCol)).dataType == SQLDataTypes.VectorType,
@@ -50,14 +39,8 @@ trait FrequencyDiscretizerParams extends Params
  * (reference: FrequencyDiscretizer.scala:157-296, itself an adaptation of
  * Spark 1.6's QuantileDiscretizer): Bernoulli-sample
  * max(numBuckets^2, 10000) rows, collect, per-feature sorted
- * value-count split search, +/-Inf sentinel normalization.
- *
- * Two split-finding paths, selected by `exactSplits`:
- * - `true` (default): the reference-parity sampled path above. Fit cost:
- *   one count + one sampled collect, independent of nInstances.
- * - `false`: distributed Greenwald-Khanna sketch (`approxQuantile`) over
- *   all features in one pass — no driver sample at all; the scale path
- *   when bit-parity with the reference is not required.
+ * value-count split search, +/-Inf sentinel normalization. Fit cost:
+ * one count + one sampled collect, independent of nInstances.
  */
 class FrequencyDiscretizer(override val uid: String)
     extends Estimator[FrequencyDiscretizerModel]
@@ -69,20 +52,12 @@ class FrequencyDiscretizer(override val uid: String)
   def setInputCol(v: String): this.type = set(inputCol, v)
   def setOutputCol(v: String): this.type = set(outputCol, v)
   def setSeed(v: Long): this.type = set(seed, v)
-  def setExactSplits(v: Boolean): this.type = set(exactSplits, v)
 
+  /** Bernoulli sample + collect + stride scan
+    * (reference: getSampledInput, FrequencyDiscretizer.scala:172-179). */
   override def fit(dataset: Dataset[_]): FrequencyDiscretizerModel = {
     transformSchema(dataset.schema, logging = true)
     val vecs = dataset.select(col($(inputCol))).toDF()
-    val splitsArray =
-      if ($(exactSplits)) fitSampled(vecs) else fitSketched(vecs)
-    copyValues(new FrequencyDiscretizerModel(uid, splitsArray)
-      .setParent(this))
-  }
-
-  /** Reference-parity path: Bernoulli sample + collect + stride scan
-    * (reference: getSampledInput, FrequencyDiscretizer.scala:172-179). */
-  private def fitSampled(vecs: DataFrame): Array[Array[Double]] = {
     val total = vecs.count()
     require(total > 0, "empty input")
     val requiredSamples = math.max($(numBuckets) * $(numBuckets), 10000)
@@ -91,7 +66,7 @@ class FrequencyDiscretizer(override val uid: String)
       .collect().map(_.getAs[Vector](0))
     require(sample.nonEmpty, "sample is empty; increase input size")
     val nf = sample.head.size
-    Array.tabulate(nf) { j =>
+    val splitsArray = Array.tabulate(nf) { j =>
       val colSample = sample.map(_(j))
       val candidates = FrequencyDiscretizer
         .findSplitCandidates(colSample, $(numBuckets) - 1)
@@ -99,31 +74,8 @@ class FrequencyDiscretizer(override val uid: String)
       FrequencyDiscretizer.checkSplits(splits)
       splits
     }
-  }
-
-  /** Scale path: distributed Greenwald-Khanna quantile sketch over every
-    * feature in ONE pass (`DataFrameStatFunctions.approxQuantile` —
-    * the same machinery as Spark's own QuantileDiscretizer, which the
-    * reference adapted its sampled algorithm from). Nothing but the
-    * per-feature split arrays reaches the driver; memory is bounded by
-    * the sketch's 1/relativeError, independent of nInstances. Duplicate
-    * quantiles collapse (skewed data may yield fewer buckets — the
-    * standard QuantileDiscretizer contract). */
-  private def fitSketched(vecs: DataFrame): Array[Array[Double]] = {
-    import org.apache.spark.ml.functions.vector_to_array
-    val nf = vecs.select(col($(inputCol))).head().getAs[Vector](0).size
-    val arr = vecs.select(vector_to_array(col($(inputCol))).as("a"))
-    val flat = arr.select((0 until nf).map(j =>
-      col("a").getItem(j).as(s"c$j")): _*)
-    val probs = (1 until $(numBuckets))
-      .map(_.toDouble / $(numBuckets)).toArray
-    val quants = flat.stat.approxQuantile(
-      (0 until nf).map(j => s"c$j").toArray, probs, 0.001)
-    quants.map { q =>
-      val splits = FrequencyDiscretizer.getSplits(q.distinct.sorted)
-      FrequencyDiscretizer.checkSplits(splits)
-      splits
-    }
+    copyValues(new FrequencyDiscretizerModel(uid, splitsArray)
+      .setParent(this))
   }
 
   override def transformSchema(schema: StructType): StructType =

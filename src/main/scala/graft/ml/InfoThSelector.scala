@@ -34,13 +34,8 @@ trait InfoThSelectorParams extends Params
   final val beta = new DoubleParam(this, "beta", "MIFS redundancy weight")
   def getBeta: Double = $(beta)
 
-  /** Partitions for the columnar working set; 0 = inherit input. */
-  final val numPartitions = new IntParam(this, "numPartitions",
-    "partitions for the columnar working set (0 = input partitioning)",
-    ParamValidators.gtEq(0))
-
   setDefault(numTopFeatures -> 10, criterion -> "mrmr", beta -> 0.0,
-    numPartitions -> 0, outputCol -> "selectedFeatures")
+    outputCol -> "selectedFeatures")
 
   protected def validateAndTransformSchema(schema: StructType): StructType = {
     require(schema($(featuresCol)).dataType == SQLDataTypes.VectorType,
@@ -57,15 +52,18 @@ trait InfoThSelectorParams extends Params
  * Spark-native re-expression of the reference selector
  * (reference: InfoSelector.scala fit path, traced in SURVEY §3.1):
  *
- *  1. block-local columnar transpose + hash partition by feature
- *     (one shuffle of O(cells) bytes), persisted;
- *  2. one job: 2-D histograms vs. the broadcast class column -> per-
- *     feature relevance I(Xi; Y) collected to the driver (nFeatures rows);
+ *  1. block-local columnar transpose, no shuffle: each partition of the
+ *     input becomes one cached record holding all of its feature
+ *     columns and its labels, and one job gathers the per-column
+ *     cardinalities and the row count;
+ *  2. one job: 2-D histograms of every feature vs. the label carried in
+ *     the same record -> per-feature relevance I(Xi; Y) collected to the
+ *     driver (nFeatures rows);
  *  3. driver-side greedy loop (replaces the Flink bulk iteration,
  *     reference InfoSelector.scala:354-364 — criterion state is tiny, so
  *     distributed iteration state buys nothing): per round, one job
  *     builds 3-D histograms against the newly selected column — read
- *     partition-locally via block-major co-location, with NO collect and
+ *     from the same record as every other column, with NO collect and
  *     NO broadcast of any column — and returns (feature, mi, cmi) rows
  *     the driver folds into the criteria. MIM short-circuits to top-k
  *     relevance (reference InfoSelector.scala:313-315) with zero extra
@@ -86,17 +84,14 @@ class InfoThSelector(override val uid: String)
   def setNumTopFeatures(v: Int): this.type = set(numTopFeatures, v)
   def setCriterion(v: String): this.type = set(criterion, v.toLowerCase)
   def setBeta(v: Double): this.type = set(beta, v)
-  def setNumPartitions(v: Int): this.type = set(numPartitions, v)
   def setFeaturesCol(v: String): this.type = set(featuresCol, v)
   def setLabelCol(v: String): this.type = set(labelCol, v)
   def setOutputCol(v: String): this.type = set(outputCol, v)
 
   override def fit(dataset: Dataset[_]): InfoThSelectorModel = {
     transformSchema(dataset.schema, logging = true)
-    val df = dataset.select(col($(labelCol)).cast("double").as("label"),
-      col($(featuresCol)).as("features")).toDF()
-    val colData = Columnar.fromLabeledDf(df, "features", "label",
-      $(numPartitions))
+    val colData =
+      Columnar.fromLabeledDf(dataset.toDF(), $(featuresCol), $(labelCol))
     try {
       val selected = InfoThSelector.select(
         colData, $(criterion), $(numTopFeatures), $(beta))
@@ -123,11 +118,10 @@ object InfoThSelector extends DefaultParamsReadable[InfoThSelector] {
       beta: Double): Array[(Int, Double)] = {
 
     val n = colData.nInstances
-    require(n > 0, "empty input")
 
-    // Relevances: one histogram pass vs. the block-carried class column
+    // Relevances: one histogram pass vs. each block's own label column
     // (reference: initializeDense, InfoTheory.scala:409-435). No label
-    // collect/broadcast — the label rides inside every block.
+    // collect/broadcast.
     val relevances = Histograms.histogram2D(colData)
       .mapValues(h => InfoTheory.mutualInfo(h, n))
       .collect()
@@ -159,10 +153,10 @@ object InfoThSelector extends DefaultParamsReadable[InfoThSelector] {
       maxCrit.setValid(false)
       if (selected.length < nToSelect) {
         // One job: 3-D histograms vs. (selected, class) -> (mi, cmi)
-        // (reference: getRedundancies, InfoTheory.scala:445-461). The
-        // selected column is read partition-locally (block-major
-        // co-location) — nothing is collected or broadcast; only the
-        // O(nFeatures) (mi, cmi) rows reach the driver.
+        // (reference: getRedundancies, InfoTheory.scala:445-461). Each
+        // block reads the selected column from its own record — nothing
+        // is collected or broadcast; only the O(nFeatures) (mi, cmi)
+        // rows reach the driver.
         val redundancies =
           Histograms.histogram3D(colData, maxFeat)
             .mapValues(h => InfoTheory.miAndCmi(h, n))

@@ -50,8 +50,8 @@ class ColumnarSpec extends SparkSpec {
     val df = spark.createDataFrame(data).toDF("label", "features")
     val col = Columnar.fromLabeledDf(df)
     // feature blocks are SparseBlocks (no densification in the cache)
-    val kinds = col.data.filter(_._1._1 < col.nFeatures)
-      .map(_._2.x.getClass.getSimpleName).distinct().collect().toSet
+    val kinds = col.data.flatMap(_.cols.map(_.getClass.getSimpleName))
+      .distinct().collect().toSet
     assert(kinds == Set("SparseBlock"))
     assert(col.collectColumn(0).values.flatten.map(_.toInt).toSeq.sorted == Seq(0, 5))
     assert(col.collectColumn(1).values.flatten.map(_.toInt).toSeq.sorted == Seq(0, 2))
@@ -102,16 +102,19 @@ class ColumnarSpec extends SparkSpec {
       Array(rng.nextInt(8).toDouble, rng.nextInt(8).toDouble)))
     val col = Columnar.fromLabeledDf(labeledDf(rows).repartition(5))
     val placement = col.data.mapPartitionsWithIndex { (pid, it) =>
-      it.map { case ((f, b), _) => (b, (pid, f)) }
+      it.map(b => (b.id, (pid, b.cols.map(_.n).toSeq :+ b.label.length)))
     }.collect().groupBy(_._1).view.mapValues(_.map(_._2)).toMap
     placement.foreach { case (b, recs) =>
       // one partition per block…
       assert(recs.map(_._1).distinct.length == 1,
         s"block $b spread over partitions ${recs.map(_._1).distinct.toSeq}")
-      // …holding every column of that block (features + label)
-      assert(recs.map(_._2).sorted.toSeq == (0 to col.nFeatures),
-        s"block $b missing columns")
+      // …holding every column of that block (features + label), aligned
+      recs.foreach { case (_, lens) =>
+        assert(lens.length == col.nFeatures + 1, s"block $b missing columns")
+        assert(lens.distinct.length == 1, s"block $b columns misaligned: $lens")
+      }
     }
+    assert(placement.values.flatten.map(_._2.head.toLong).sum == col.nInstances)
     col.unpersist()
   }
 
@@ -121,6 +124,33 @@ class ColumnarSpec extends SparkSpec {
     }
     intercept[org.apache.spark.SparkException] {
       Columnar.fromLabeledDf(labeledDf(Seq((0.0, Array(1.5))))).data.count()
+    }
+    // null label, null vector, empty input, mixed vector sizes (in one
+    // block and across blocks): an IllegalArgumentException naming the
+    // column (as the cause when it is thrown in a task)
+    def rejection(df: org.apache.spark.sql.DataFrame): Throwable =
+      intercept[Exception](Columnar.fromLabeledDf(df).data.count()) match {
+        case e: org.apache.spark.SparkException if e.getCause != null => e.getCause
+        case e => e
+      }
+    val nullLabel = spark.createDataFrame(Seq(
+      (Some(1.0), Vectors.dense(1.0)), (Some(1.0), Vectors.dense(2.0)),
+      (Option.empty[Double], Vectors.dense(3.0)))).toDF("label", "features")
+    val nullVector = spark.createDataFrame(Seq(
+      (1.0, Vectors.dense(1.0)), (0.0, null))).toDF("label", "features")
+    // 8 rows in 4 partitions of 2 rows each, one block per partition
+    def sized(sizes: Int*) = spark.createDataFrame(spark.sparkContext.parallelize(
+      sizes.map(d => (0.0, Vectors.dense(Array.fill(d)(1.0)))), 4)).toDF("label", "features")
+    val cases = Seq(
+      nullLabel -> "'label'",
+      nullVector -> "'features'",
+      labeledDf(Seq.empty) -> "'features'",
+      sized(1, 2, 1, 1, 1, 1, 1, 1) -> "'features'",
+      sized(1, 1, 1, 1, 2, 2, 2, 2) -> "'features'")
+    cases.foreach { case (df, column) =>
+      val e = rejection(df)
+      assert(e.isInstanceOf[IllegalArgumentException], s"got $e")
+      assert(e.getMessage.contains(column), e.getMessage)
     }
   }
 

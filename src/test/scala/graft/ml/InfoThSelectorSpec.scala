@@ -113,46 +113,69 @@ class InfoThSelectorSpec extends SparkSpec {
     }
   }
 
-  test("greedy mRMR/JMI over 24 features matches a local brute-force run") {
+  test("all 7 criteria match brute force in every data layout") {
     // independent in-memory reimplementation of the greedy loop: exact MI
-    // and CMI from full contingency counts, same criterion algebra
+    // and CMI from full contingency counts, same criterion algebra; the
+    // same 24-feature rows under several partitionings, a shuffled row
+    // order and sparse encoding must give the same path and scores
     val rng = new scala.util.Random(29)
     val nf = 24
     val n = 800
+    val k = 6
+    val beta = 0.5
     val rows = (0 until n).map { _ =>
       val x = Array.fill(nf)(rng.nextInt(4))
       val label = (x(3) + x(17) + (if (rng.nextDouble() < 0.2) 1 else 0)) % 4
       (label.toDouble, x)
     }
-    val df = toDf(rows.map { case (l, x) =>
-      (l, Vectors.dense(x.map(_.toDouble)))
-    })
     val xs = Array.tabulate(nf)(j => rows.map(_._2(j)))
     val y = rows.map(_._1.toInt)
-    def brutalGreedy(crit: String, k: Int): Seq[Int] = {
-      val rel = (0 until nf).map(f => graft.core.Brute.mi(xs(f), y))
+    val rel = (0 until nf).map(f => graft.core.Brute.mi(xs(f), y))
+    val pairs = collection.mutable.Map.empty[(Int, Int), (Double, Double)]
+    def brutalGreedy(crit: String): Seq[(Int, Double)] = {
       val cs = (0 until nf).map(f =>
-        graft.core.InfoThCriterionFactory(crit).init(rel(f)))
-      val sel = collection.mutable.ArrayBuffer.empty[Int]
+        graft.core.InfoThCriterionFactory(crit, beta).init(rel(f)))
+      val sel = collection.mutable.ArrayBuffer.empty[(Int, Double)]
       while (sel.length < k) {
         val valid = (0 until nf).filter(f => cs(f).valid)
         val best = valid.maxBy(f => (cs(f).score, -f))
-        sel += best
+        // the path must not rest on a floating-point tie-break
+        val runnerUp = valid.filter(_ != best).map(cs(_).score).max
+        assert(cs(best).score - runnerUp > 1e-9, s"$crit: near-tie at round ${sel.length}")
+        sel += ((best, cs(best).score))
         cs(best).setValid(false)
         if (sel.length < k) (0 until nf).foreach { f =>
           if (cs(f).valid) {
-            cs(f).update(graft.core.Brute.mi(xs(f), xs(best)),
-              graft.core.Brute.cmi(xs(f), xs(best), y))
+            val (mi, cmi) = pairs.getOrElseUpdate((f, best),
+              (graft.core.Brute.mi(xs(f), xs(best)),
+                graft.core.Brute.cmi(xs(f), xs(best), y)))
+            cs(f).update(mi, cmi)
           }
         }
       }
       sel.toSeq
     }
-    Seq("mrmr", "jmi").foreach { crit =>
-      val model = new InfoThSelector().setCriterion(crit)
-        .setNumTopFeatures(6).fit(df)
-      assert(model.selectionPath.map(_._1).toSeq == brutalGreedy(crit, 6),
-        s"$crit distributed selection diverges from brute force")
+    val dense = rows.map { case (l, x) => (l, Vectors.dense(x.map(_.toDouble))) }
+    val shuffled = new scala.util.Random(37).shuffle(dense)
+    val sparse = dense.map { case (l, v) => (l, v.toSparse: Vector) }
+    val inputs = Seq(
+      "dense" -> toDf(dense),
+      "repartition(1)" -> toDf(dense).repartition(1),
+      "repartition(3)" -> toDf(dense).repartition(3),
+      "repartition(17)" -> toDf(dense).repartition(17),
+      "shuffled rows" -> toDf(shuffled),
+      "sparse" -> toDf(sparse))
+    graft.core.InfoThCriterionFactory.all.foreach { crit =>
+      val expected = brutalGreedy(crit)
+      inputs.foreach { case (layout, df) =>
+        val path = new InfoThSelector().setCriterion(crit).setBeta(beta)
+          .setNumTopFeatures(k).fit(df).selectionPath.toSeq
+        assert(path.map(_._1) == expected.map(_._1),
+          s"$crit on $layout: distributed selection diverges from brute force")
+        path.zip(expected).foreach { case ((_, got), (_, want)) =>
+          assert(math.abs(got - want) < 1e-9, s"$crit on $layout: score $got vs $want")
+        }
+      }
     }
   }
 
@@ -198,8 +221,8 @@ class InfoThSelectorSpec extends SparkSpec {
     // the cached working set must hold SparseBlocks, not densified rows
     val df = toDf(rows)
     val colData = graft.core.Columnar.fromLabeledDf(df)
-    val kinds = colData.data.filter(_._1._1 < nf)
-      .map(_._2.x.getClass.getSimpleName).distinct().collect().toSet
+    val kinds = colData.data.flatMap(_.cols.map(_.getClass.getSimpleName))
+      .distinct().collect().toSet
     assert(kinds == Set("SparseBlock"))
     colData.unpersist()
   }
